@@ -41,6 +41,7 @@ import json
 import re
 import threading
 import urllib.parse
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -74,6 +75,24 @@ FS_ACL_DEFAULT_ADMIN = "4sadminuser"
 # collects it to the driver — guard like every other driver-side
 # materialization in this repo (stream_lm_filter.max_lm_rows etc.)
 MAX_ACL_ROWS = 100_000
+
+# engines cached per snapshot: distinct read scopes are few (one per
+# ACL class), but a hostile key stream must not grow the cache
+MAX_ENGINES = 32
+
+# the reference's 403 bodies: a query without an apikey (httpd.c:1157,
+# http_error shape: message line + server line), a status page or
+# static-ACL write without a known key, and a data-driven-ACL write
+# without an admin key (httpd.c:724)
+_NO_APIKEY = _code_body(
+    "403 forbidden - apikey parameter has to be included in request."
+)
+_BAD_APIKEY = (
+    "403 forbidden - valid apikey parameter has to be included in request."
+)
+_NOT_ADMIN = _code_body(
+    "403 forbidden - updates only with admin API KEY when ACL is enabled"
+)
 
 
 class AclInfo:
@@ -213,6 +232,29 @@ RESTRICTED_SOFT_LIMIT = 998
 _CALLBACK_RE = re.compile(r"^[A-Za-z_$][A-Za-z0-9_$]*(\.[A-Za-z_$][A-Za-z0-9_$]*)*$")
 
 
+def _import(ue: UpdateEngine, graph: str, quads, replace: bool) -> None:
+    """One /data/ import: PUT replaces ``graph``, POST appends to it.
+    Import-time full-text derivation (T1-T3): when the system:config
+    graph directs indexing, the INCOMING triples grow
+    fs:token/stem/dmetaphone quads in their own graph — exactly the
+    reference's import hook (buffer_tokens/stems/metaphones,
+    import.c:616-700); pre-existing triples are not retro-indexed there
+    either."""
+    from fourstore_spark.operators.fulltext import (
+        derive_fulltext_quads,
+        fulltext_config,
+    )
+
+    if replace:
+        ue.update(f"CLEAR SILENT GRAPH <{graph}>")
+    ue.add_quads(quads)  # tracked: O(delta) commit
+    cfg = fulltext_config(ue.quads)
+    if cfg:
+        derived = derive_fulltext_quads(quads, cfg)
+        if derived is not None:
+            ue.add_quads(derived)
+
+
 class SparqlHttpServer:
     """serve() blocks; start()/stop() run it on a thread (for tests)."""
 
@@ -254,25 +296,18 @@ class SparqlHttpServer:
         self._write_lock = threading.Lock()
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
-        # queries against the live store must see updates, BUT rebuilding
-        # a SparqlEngine per request throws away its compiled-plan cache
-        # (the whole point of fs_query_cache): cache ONE engine per quads
-        # snapshot — updates swap ue.quads to a new DataFrame object,
-        # which invalidates this by identity
-        self._engine_for: object | None = None
-        self._engine: SparqlEngine | None = None
-        # data-driven ACL mode: the AclInfo image and the per-deny-set
-        # engine cache are keyed on the quads snapshot identity — every
-        # write swaps ue.quads, which is exactly the reference's
-        # fsp_acl_needs_reload trigger (query-cache.c:242-243). Engines
-        # are cached per denied-graph set so users sharing a visibility
-        # class share one compiled-plan cache.
-        self._acl_info_for: object | None = None
+        # what _resolve derives from one ue.quads snapshot: the AclInfo
+        # image and one engine per read scope (a SparqlEngine keeps the
+        # compiled-plan cache that is the point of fs_query_cache, so it
+        # must outlive the request). Every write swaps ue.quads to a new
+        # DataFrame, which drops both at once — the reference's
+        # fsp_acl_needs_reload trigger (query-cache.c:242-243), here on
+        # ANY write rather than only system:config writes: more often,
+        # never less.
+        self._cache_lock = threading.Lock()
+        self._snapshot: object | None = None
         self._acl_info: AclInfo | None = None
-        from collections import OrderedDict
-
-        self._acl_engines: "OrderedDict" = OrderedDict()
-        self._acl_lock = threading.Lock()
+        self._engines: OrderedDict = OrderedDict()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -309,52 +344,14 @@ class SparqlHttpServer:
                 self.send_header("Content-Length", "0")
                 self.end_headers()
 
-            def _acl_engine(self, params: dict):
-                """Engine for this request, apikey-filtered when graph
-                access control is on. Returns (engine, error_response)."""
-                acl = outer.graph_access_control
-                if acl is None:
-                    if outer._engine_for is not outer.ue.quads:
-                        outer._engine = SparqlEngine(
-                            outer.spark,
-                            outer.ue.quads,
-                            # 4store parity: GRAPH ?g also binds default:
-                            graph_var_includes_default=True,
-                        )
-                        outer._engine_for = outer.ue.quads
-                    return outer._engine, None
-                key = params.get("apikey")
-                if not key:
-                    # httpd.c:1157 wording (body shape = http_error:
-                    # message line + server line)
-                    return None, (
-                        403,
-                        _code_body(
-                            "403 forbidden - apikey parameter has to be "
-                            "included in request."
-                        ),
-                    )
-                if acl is True:
-                    # data-driven mode: admins see everything
-                    # (no_access_for_user returns NULL for admins,
-                    # query-cache.c:97-99); everyone else gets the
-                    # small DENY list of restricted graphs
-                    info = outer._current_acl_info()
-                    denied = (
-                        () if info.is_admin(key) else info.denied_for(key)
-                    )
-                    return outer._engine_for_denied(denied), None
-                # static dict mode: unknown key -> empty allow-list
-                # -> deny-all
-                return (
-                    SparqlEngine(
-                        outer.spark,
-                        outer.ue.quads,
-                        allowed_graphs=list(acl.get(key, [])),
-                        graph_var_includes_default=True,
-                    ),
-                    None,
-                )
+            def _grant(self, params: dict, kind: str):
+                """outer._resolve for this request's apikey: returns
+                (granted, engine), having answered the 403 when not
+                granted."""
+                eng, refused = outer._resolve(params.get("apikey"), kind)
+                if refused:
+                    self._send(403, refused)
+                return refused is None, eng
 
             def _params(self) -> dict:
                 url = urllib.parse.urlparse(self.path)
@@ -400,9 +397,9 @@ class SparqlHttpServer:
                     )
                 mp = multiparams or {}
                 try:
-                    eng, err = self._acl_engine(params)
-                    if err:
-                        return self._send(err[0], err[1])
+                    granted, eng = self._grant(params, "query")
+                    if not granted:
+                        return
                     res = eng.query(
                         text,
                         soft_limit=limit,
@@ -475,38 +472,12 @@ class SparqlHttpServer:
                     # ADVICE r4: under graph access control this page must
                     # not leak predicate IRIs/counts to unauthenticated
                     # clients (nor offer them a free full-store scan) —
-                    # require a KNOWN apikey and scope the scan to that
-                    # key's allowed graphs
-                    from pyspark.sql import functions as F
-
-                    quads = outer.ue.quads
-                    acl = outer.graph_access_control
-                    if acl is True:
-                        key = self._params().get("apikey")
-                        if not key:
-                            return self._send(
-                                403,
-                                "403 forbidden - valid apikey parameter "
-                                "has to be included in request.",
-                            )
-                        info = outer._current_acl_info()
-                        if not info.is_admin(key):
-                            denied = info.denied_for(key)
-                            if denied:
-                                quads = quads.where(
-                                    ~F.col("g").isin(list(denied))
-                                )
-                    elif acl is not None:
-                        key = self._params().get("apikey")
-                        if key not in acl:
-                            return self._send(
-                                403,
-                                "403 forbidden - valid apikey parameter "
-                                "has to be included in request.",
-                            )
-                        quads = quads.where(
-                            F.col("g").isin(list(acl[key]))
-                        )
+                    # require a known apikey and count that key's scoped
+                    # engine quads (SparqlEngine applies the graph filter)
+                    granted, eng = self._grant(self._params(), "status")
+                    if not granted:
+                        return
+                    quads = eng.quads
                     rows = quads.groupBy("p").count().orderBy("p").collect()
                     models = quads.select("g").distinct().count()
                     body = [
@@ -528,23 +499,12 @@ class SparqlHttpServer:
                     )
                 if path == "/status/cache":
                     # http_cache_report (httpd.c:882-957): RID-cache hit
-                    # stats; here the compiled-plan cache's (under ACL
-                    # mode engines are per-request, so a fresh one — all
-                    # zeros — stands in). Same apikey gate as /status/size
+                    # stats; here the compiled-plan cache of the
+                    # requester's engine. Same apikey gate as /status/size
                     # (ADVICE r4).
-                    acl = outer.graph_access_control
-                    key = self._params().get("apikey")
-                    if acl is not None and (
-                        not key if acl is True else key not in acl
-                    ):
-                        return self._send(
-                            403,
-                            "403 forbidden - valid apikey parameter "
-                            "has to be included in request.",
-                        )
-                    eng = outer._engine or SparqlEngine(
-                        outer.spark, outer.ue.quads
-                    )
+                    granted, eng = self._grant(self._params(), "status")
+                    if not granted:
+                        return
                     return self._page(
                         "SPARQL httpd server status - cache",
                         "<table border=1 cellpadding=6>\n"
@@ -595,38 +555,6 @@ class SparqlHttpServer:
                     )
                 self._send(404, "not found")
 
-            def _write_denied(self, params: dict) -> bool:
-                """Destructive ops (update/PUT/DELETE) under graph
-                access control. Data-driven mode: ADMIN keys only
-                (data_modification_acl_granted, httpd.c:494-500 — a
-                missing key and a non-admin key both get the same 403).
-                Static dict mode: any known key (legacy extension)."""
-                acl = outer.graph_access_control
-                if acl is None:
-                    return False
-                if acl is True:
-                    if outer._current_acl_info().is_admin(
-                        params.get("apikey")
-                    ):
-                        return False
-                    # httpd.c:724 wording
-                    self._send(
-                        403,
-                        _code_body(
-                            "403 forbidden - updates only with admin "
-                            "API KEY when ACL is enabled"
-                        ),
-                    )
-                    return True
-                if params.get("apikey") in acl:
-                    return False
-                self._send(
-                    403,
-                    "403 forbidden - valid apikey parameter has to be "
-                    "included in request.",
-                )
-                return True
-
             def do_POST(self):
                 url = urllib.parse.urlparse(self.path)
                 params = self._params()
@@ -634,27 +562,22 @@ class SparqlHttpServer:
                 if path == "/sparql":
                     return self._query(params, self._multi)
                 if path == "/update":
-                    if self._write_denied(params):
+                    if not self._grant(params, "write")[0]:
                         return
                     text = params.get("update")
                     if not text:
                         return self._send(400, "missing update parameter")
                     try:
-                        with outer._write_lock:
-                            msgs = outer.ue.update(_with_default_base(text))
-                            # materialize: a long-lived server otherwise
-                            # accumulates unbounded union/filter lineage
-                            # across writes — every later query would
-                            # replay the whole update history (and the
-                            # superseded plans pin JVM heap)
-                            outer.ue.commit()
+                        msgs = outer._write(
+                            lambda ue: ue.update(_with_default_base(text))
+                        )
                     except Exception as exc:  # noqa: BLE001
                         return self._send(400, f"update error: {exc}")
                     # body = fs_update messages joined by LF, + final LF
                     # (http_import_start, httpd.c:515-525)
                     return self._send(200, "\n".join(msgs) + "\n")
                 if path == "/data":
-                    if self._write_denied(params):
+                    if not self._grant(params, "write")[0]:
                         return
                     graph = params.get("graph")
                     # form POST (http_post_data, httpd.c:635): the RDF
@@ -738,28 +661,9 @@ class SparqlHttpServer:
                       ct: str | None = None):
                 try:
                     quads = self._parse_rdf_body(body, graph, ct=ct)
-                    with outer._write_lock:
-                        if replace:
-                            outer.ue.update(f"CLEAR SILENT GRAPH <{graph}>")
-                        outer.ue.add_quads(quads)  # tracked: O(delta) commit
-                        # import-time full-text derivation (T1-T3): when
-                        # the system:config graph directs indexing, the
-                        # INCOMING triples grow fs:token/stem/dmetaphone
-                        # quads in their own graph — exactly the
-                        # reference's import hook (buffer_tokens/stems/
-                        # metaphones, import.c:616-700); pre-existing
-                        # triples are not retro-indexed there either
-                        from fourstore_spark.operators.fulltext import (
-                            derive_fulltext_quads,
-                            fulltext_config,
-                        )
-
-                        cfg = fulltext_config(outer.ue.quads)
-                        if cfg:
-                            derived = derive_fulltext_quads(quads, cfg)
-                            if derived is not None:
-                                outer.ue.add_quads(derived)
-                        outer.ue.commit()  # bound lineage (see /update/)
+                    outer._write(
+                        lambda ue: _import(ue, graph, quads, replace)
+                    )
                 except Exception as exc:  # noqa: BLE001
                     # http_error("400 RDF parser reported errors") shape,
                     # with the parser detail appended for debuggability
@@ -796,7 +700,7 @@ class SparqlHttpServer:
                     return self._send(
                         404, "PUT expects /data/<graph-uri> or ?graph="
                     )
-                if self._write_denied(params):
+                if not self._grant(params, "write")[0]:
                     return
                 self._load(graph, params.get("__body", ""), replace=True)
 
@@ -807,12 +711,12 @@ class SparqlHttpServer:
                     return self._send(
                         404, "DELETE expects /data/<graph-uri> or ?graph="
                     )
-                if self._write_denied(params):
+                if not self._grant(params, "write")[0]:
                     return
                 try:
-                    with outer._write_lock:
-                        outer.ue.update(f"CLEAR SILENT GRAPH <{graph}>")
-                        outer.ue.commit()  # bound lineage (see /update/)
+                    outer._write(
+                        lambda ue: ue.update(f"CLEAR SILENT GRAPH <{graph}>")
+                    )
                 except Exception as exc:  # noqa: BLE001
                     return self._send(400, str(exc))
                 # "200 deleted successfully" (httpd.c:825)
@@ -829,39 +733,75 @@ class SparqlHttpServer:
 
         self._handler_cls = Handler
 
-    def _current_acl_info(self) -> AclInfo:
-        """AclInfo for the live quads snapshot. Every write swaps
-        ue.quads to a new DataFrame, which is this cache's reload
-        trigger — the same contract as fsp_acl_needs_reload /
-        fs_acl_load_system_info (query-cache.c:242-243), reloading
-        strictly more often (on ANY write, not just system:config
-        writes), never less."""
-        with self._acl_lock:
-            if self._acl_info_for is not self.ue.quads:
-                self._acl_info = load_acl_info(self.ue.quads)
-                self._acl_info_for = self.ue.quads
-                self._acl_engines.clear()
-            return self._acl_info
+    def _resolve(self, key: str | None, kind: str):
+        """The one place the ACL mode is decided: a request's apikey ->
+        ``(engine, None)``, the requester's cached engine (None for a
+        granted write), or ``(None, body)``, the 403 to answer. ``kind``
+        is "query", "status" or "write"; each keeps its 403 wording.
 
-    def _engine_for_denied(self, denied: tuple) -> SparqlEngine:
-        """One engine per (quads snapshot, denied-graph set): users in
-        the same visibility class share a compiled-plan cache, and
-        admins (empty deny set) share one unrestricted engine."""
-        with self._acl_lock:
-            eng = self._acl_engines.get(denied)
+        - no ACL: everything visible, anyone may write;
+        - data-driven (``True``): admins see everything
+          (no_access_for_user returns NULL for admins,
+          query-cache.c:97-99), everyone else loses the small DENY list
+          of restricted graphs; only admins write
+          (data_modification_acl_granted, httpd.c:494-500);
+        - static dict: a key sees its allow-list (an unknown key gets an
+          empty one: deny-all); any known key writes."""
+        acl = self.graph_access_control
+        with self._cache_lock:
+            quads = self.ue.quads
+            if self._snapshot is not quads:
+                self._snapshot, self._acl_info = quads, None
+                self._engines.clear()
+            # scope: the (allowed, denied) graph filter of the engine;
+            # allowed None means no allow-list
+            if acl is None:
+                scope, known, may_write = (None, ()), True, True
+            elif acl is True:
+                info = self._acl_info
+                if key and info is None:
+                    info = self._acl_info = load_acl_info(quads)
+                admin = bool(key) and info.is_admin(key)
+                denied = info.denied_for(key) if key and not admin else ()
+                scope, known, may_write = (None, denied), bool(key), admin
+            else:
+                scope = (tuple(acl.get(key, ())), ())
+                known = may_write = key in acl
+            if kind == "write":
+                if may_write:
+                    return None, None
+                return None, _NOT_ADMIN if acl is True else _BAD_APIKEY
+            if kind == "query" and acl is not None and not key:
+                return None, _NO_APIKEY
+            if kind == "status" and not known:
+                return None, _BAD_APIKEY
+            eng = self._engines.pop(scope, None)
             if eng is None:
+                allowed, denied = scope
                 eng = SparqlEngine(
                     self.spark,
-                    self.ue.quads,
-                    denied_graphs=list(denied) or None,
+                    quads,
+                    allowed_graphs=None if allowed is None else list(allowed),
+                    denied_graphs=list(denied),
+                    # 4store parity: GRAPH ?g also binds default:
                     graph_var_includes_default=True,
                 )
-                self._acl_engines[denied] = eng
-                # bounded: distinct deny sets are few (one per ACL
-                # class), but a hostile key stream shouldn't grow this
-                while len(self._acl_engines) > 32:
-                    self._acl_engines.popitem(last=False)
-            return eng
+            self._engines[scope] = eng  # most recently used last
+            if len(self._engines) > MAX_ENGINES:
+                self._engines.popitem(last=False)
+            return eng, None
+
+    def _write(self, apply):
+        """The one write path: ``apply(ue)`` under the write lock,
+        inside ``ue.transaction()``. Its commit materializes — a
+        long-lived server otherwise accumulates unbounded union/filter
+        lineage across writes, so every later query would replay the
+        whole update history (and the superseded plans pin JVM heap) —
+        and any failure, the commit's included, rolls the store back to
+        where the write began: an import completes or is undone
+        (4store.h:55-58)."""
+        with self._write_lock, self.ue.transaction() as ue:
+            return apply(ue)
 
     def start(self) -> None:
         self._httpd = ThreadingHTTPServer((self.host, self.port), self._handler_cls)

@@ -298,7 +298,9 @@ class UpdateEngine:
         self._txn_base = None
 
     def transaction(self):
-        """Context manager: commit on clean exit, rollback on exception."""
+        """Context manager: commit on clean exit, rollback on exception
+        — a failing commit included, so it neither leaves its write
+        visible nor the transaction open."""
         import contextlib
 
         @contextlib.contextmanager
@@ -306,11 +308,10 @@ class UpdateEngine:
             self.begin()
             try:
                 yield self
+                self.commit()
             except BaseException:
                 self.rollback()
                 raise
-            else:
-                self.commit()
 
         return _txn()
 

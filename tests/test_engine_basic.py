@@ -327,3 +327,19 @@ def test_iri_base_resolution_rfc3986_targets(engine):
     assert r["frag"] == "http://ex.org/dir/page?old#f2"
     assert r["self"] == "http://ex.org/dir/page?old"
     assert r["rel"] == "http://ex.org/dir/rel"
+
+
+def test_flat_quotes_backtick_in_column_name(spark):
+    # flat() renders SQL expression strings: a backtick inside a column
+    # name must be escaped, not end the quoted identifier
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from fourstore_spark.sparql.engine import SparqlResult
+
+    term = StructType([StructField("lex", StringType())])
+    df = spark.createDataFrame(
+        [(("x",),)], StructType([StructField("a`b", term)])
+    )
+    out = SparqlResult("SELECT", df).flat()
+    assert out.columns == ["a`b"]
+    assert out.collect()[0][0] == "x"

@@ -545,3 +545,140 @@ def test_http_data_content_type_and_extension_formats(server):
         for b in json.loads(body)["results"]["bindings"]
     )
     assert vals == ["ext-ttl", "rdfxml", "rdfxml", "turtle"]
+
+
+def _fail_fulltext_config(monkeypatch):
+    """Fail every /data/ import after its quads are added: the
+    full-text config lookup runs between add_quads and commit."""
+    import fourstore_spark.operators.fulltext as fulltext
+
+    def boom(quads):
+        raise RuntimeError("injected fulltext_config failure")
+
+    monkeypatch.setattr(fulltext, "fulltext_config", boom)
+
+
+def _ask(srv, text):
+    st, body = _get(srv, f"/sparql/?query={urllib.parse.quote(text)}")
+    assert st == 200
+    return json.loads(body)["boolean"]
+
+
+def test_http_post_data_failing_after_add_is_undone(spark, monkeypatch):
+    srv = SparqlHttpServer(spark, port=0)
+    srv.start()
+    try:
+        _fail_fulltext_config(monkeypatch)
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/data/?graph=urn:g:postfail",
+            data=b'<urn:pf> <urn:p> "lost" .',
+            headers={"Content-Type": "application/n-triples"},
+        )
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            urllib.request.urlopen(req)
+        assert exc.value.code == 400
+        assert exc.value.read().decode().startswith(
+            "400 RDF parser reported errors: injected"
+        )
+        assert not _ask(
+            srv, 'ASK { GRAPH <urn:g:postfail> { <urn:pf> <urn:p> "lost" } }'
+        )
+    finally:
+        srv.stop()
+
+
+def test_http_put_data_failing_after_add_keeps_old_graph(spark, monkeypatch):
+    srv = SparqlHttpServer(spark, port=0)
+    srv.start()
+    try:
+        graph = urllib.parse.quote("urn:g:putfail", safe="")
+        st, _ = _put(srv, f"/data/{graph}", '<urn:a> <urn:p> "old" .')
+        assert st == 201
+        _fail_fulltext_config(monkeypatch)
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            _put(srv, f"/data/{graph}", '<urn:a> <urn:p> "new" .')
+        assert exc.value.code == 400
+        q = urllib.parse.quote(
+            "SELECT ?o WHERE { GRAPH <urn:g:putfail> { ?s ?p ?o } }"
+        )
+        st, body = _get(srv, f"/sparql/?query={q}")
+        vals = [b["o"]["value"] for b in json.loads(body)["results"]["bindings"]]
+        assert vals == ["old"]
+    finally:
+        srv.stop()
+
+
+def test_http_status_cache_reports_requesters_engine(spark):
+    # under graph access control a key's queries share one cached
+    # engine per store snapshot, and /status/cache reports that engine
+    srv = SparqlHttpServer(
+        spark, port=0, graph_access_control={"alice-key": ["urn:g:open"]}
+    )
+    srv.start()
+    try:
+        q = urllib.parse.quote("SELECT ?o WHERE { ?s ?p ?o }")
+        for _ in range(2):
+            st, _ = _get(srv, f"/sparql/?query={q}&apikey=alice-key")
+            assert st == 200
+        st, body = _get(srv, "/status/cache/?apikey=alice-key")
+        assert st == 200
+        assert "<tr><td>cache_entries</td><td>1</td></tr>" in body
+        assert "<tr><td>cache_hits</td><td>1</td></tr>" in body
+    finally:
+        srv.stop()
+
+
+def test_http_concurrent_writes_and_scoped_reads(spark):
+    # more request threads than cores, on the data-driven ACL server:
+    # every write goes through the write lock and its transaction, and
+    # readers share the per-snapshot engine cache while writes replace
+    # the snapshot under them; a lost update would drop a triple
+    import sys
+    import threading
+
+    srv = SparqlHttpServer(spark, port=0, graph_access_control=True)
+    srv.start()
+    n_writers, errors = 6, []
+    q = urllib.parse.quote(
+        "SELECT ?s WHERE { GRAPH <urn:g:conc> { ?s <urn:p> ?o } }"
+    )
+
+    def write(i):
+        try:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{srv.port}/data/?graph=urn:g:conc"
+                "&apikey=4sadminuser",
+                data=f'<urn:w{i}> <urn:p> "{i}" .'.encode(),
+                headers={"Content-Type": "application/n-triples"},
+            )
+            with urllib.request.urlopen(req) as r:
+                assert r.status == 200
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    def read():
+        try:
+            for _ in range(3):
+                st, _ = _get(srv, f"/sparql/?query={q}&apikey=reader")
+                assert st == 200
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=write, args=(i,))
+               for i in range(n_writers)]
+    threads += [threading.Thread(target=read) for _ in range(4)]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        st, body = _get(srv, f"/sparql/?query={q}&apikey=reader")
+        got = {b["s"]["value"] for b in json.loads(body)["results"]["bindings"]}
+        assert got == {f"urn:w{i}" for i in range(n_writers)}
+    finally:
+        sys.setswitchinterval(old_interval)
+        srv.stop()

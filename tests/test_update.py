@@ -195,6 +195,25 @@ def test_transaction_rollback_and_commit(spark, ue):
     ue.rollback()
 
 
+def test_transaction_failed_commit_rolls_back(spark, ue, monkeypatch):
+    ue.update('INSERT DATA { <urn:base> <urn:p> "base" }')
+    ue.commit()
+    before = ue.quads
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected commit failure")
+
+    monkeypatch.setattr(ue, "commit", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        with ue.transaction():
+            ue.update('INSERT DATA { <urn:t1> <urn:p> "t1" }')
+    assert ue.quads is before
+    monkeypatch.undo()
+    with ue.transaction():
+        ue.update('INSERT DATA { <urn:t2> <urn:p> "t2" }')
+    assert sorted(r.s for r in ue.quads.collect()) == ["urn:base", "urn:t2"]
+
+
 def test_insert_where_with_property_path(spark):
     """INSERT ... WHERE with a + closure: the update's WHERE goes through
     the same translator, so paths (beyond-reference) work in updates."""
